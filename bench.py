@@ -2,7 +2,7 @@
 """Headline benchmark: one JSON line with per-query wall times.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the host's CPU count),
      WOTAN_BENCH_DOCS (override synth corpus size).
 
 Covers the engine's hot paths: packed robust detrend (biweight), packed
@@ -27,7 +27,8 @@ if REPO not in sys.path:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from wotan_spark.spark.session import default_cores
+    cpus = default_cores()
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else 0.0
     # stamp BEFORE Spark starts: the 1-min load here is pre-existing host
     # contention, not our own executors

@@ -45,8 +45,7 @@ def _main_ann() -> None:
     from wotan_spark.spark.session import get_spark
 
     load0 = os.getloadavg()
-    spark = get_spark(app_name="bench-ann-index",
-                      cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark(app_name="bench-ann-index")
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     n_vecs = emb.count()
@@ -101,8 +100,7 @@ def main() -> None:
     from wotan_spark.spark.session import get_spark
 
     load0 = os.getloadavg()
-    spark = get_spark(app_name="bench-neardup-index",
-                      cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark(app_name="bench-neardup-index")
     spark.sparkContext.setLogLevel("ERROR")
     if KIND == "embedding":
         docs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")

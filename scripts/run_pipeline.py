@@ -29,6 +29,8 @@ if REPO not in sys.path:
 
 
 def main() -> None:
+    from wotan_spark.spark.session import default_cores
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="sequences parquet path")
     ap.add_argument("--synth-docs", type=int,
@@ -38,7 +40,7 @@ def main() -> None:
     ap.add_argument("--window-length", type=float, default=17.0)
     ap.add_argument("--tier-factor", type=int, default=10)
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=default_cores())
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--checkpoint-dir", default=None,
                     help="reliable checkpoint dir for iterative operators "

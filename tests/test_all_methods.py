@@ -83,19 +83,24 @@ def test_robust_cosine_and_masked_lowess():
 def test_flatten_dropin_signature_and_returns():
     """The top-level ``flatten`` accepts the reference's exact parameter
     list and reproduces its return-shape contract, so reference call sites
-    run unchanged (tested against the reference function's own signature)."""
-    import ast
+    run unchanged."""
     import inspect
 
     from wotan_spark.compat import flatten
 
-    # the reference module imports scipy (absent here), so read its
-    # signature from source instead of importing it
-    tree = ast.parse(open("/root/reference/wotan/flatten.py").read())
-    fn = next(n for n in tree.body
-              if isinstance(n, ast.FunctionDef) and n.name == "flatten")
-    ref_params = [a.arg for a in fn.args.args]
-    assert list(inspect.signature(flatten).parameters) == ref_params
+    # the reference signature, pinned from wotan/flatten.py:24-43
+    # (SURVEY.md section 2.1)
+    empty = inspect.Parameter.empty
+    ref_params = {
+        "time": empty, "flux": empty, "window_length": None,
+        "edge_cutoff": 0, "break_tolerance": None, "cval": None,
+        "return_trend": False, "method": "biweight", "kernel": None,
+        "kernel_size": None, "kernel_period": None, "proportiontocut": 0.1,
+        "robust": False, "max_splines": 50, "stdev_cut": 2,
+        "return_nsplines": False, "mask": None, "verbose": False}
+    params = inspect.signature(flatten).parameters
+    assert list(params) == list(ref_params)
+    assert {k: p.default for k, p in params.items()} == ref_params
 
     time, flux = synthetic_series(points=300)
     f = flatten(time, flux, window_length=0.5, method="median")

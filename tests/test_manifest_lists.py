@@ -271,3 +271,25 @@ def test_where_in_and_zorder_edge_cases(spark, tmp_path):
     # conjunction with an absent-stats column: file kept, result exact
     got = tz.read(spark, where=[("x", 0, 49), ("c", 7, 7)])
     assert got.count() == 50
+
+
+def test_zorder_rejects_more_columns_than_the_key_holds(spark, tmp_path):
+    """Nine 8-bit dimensions need 72 bits: the shift past bit 63 would
+    wrap and corrupt the Morton key, so compact() refuses the input."""
+    import pytest
+
+    cols = [f"c{i}" for i in range(9)]
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(spark.createDataFrame(
+        [tuple(range(i, i + 9)) for i in range(20)],
+        ", ".join(f"{c} int" for c in cols)))
+    with pytest.raises(ValueError, match="64-bit key holds at most 8"):
+        t.compact(spark, cluster_by=cols)
+    assert t.read(spark).count() == 20       # table untouched
+
+
+def test_read_empty_where_is_a_value_error(spark, tmp_path):
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(1,), (2,)], "x int"))
+    with pytest.raises(ValueError, match="at least one"):
+        t.read(spark, where=[])

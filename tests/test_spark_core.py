@@ -476,3 +476,87 @@ def test_sequences_from_events_maps_null_nan_to_sentinel(spark, tmp_path):
     assert len(out) == 1 and out[0].doc_id == "user_7"
     assert out[0].tokens == [1000, int(SENTINEL), int(SENTINEL), -500]
     assert out[0].n_tok == 4
+
+
+def _sorted_frame(df, key):
+    return df.toPandas().sort_values(key).reset_index(drop=True)
+
+
+def _assert_array_rows_equal(got, want):
+    a = {r.doc_id: r for r in got.collect()}
+    b = {r.doc_id: r for r in want.collect()}
+    assert a.keys() == b.keys()
+    for k in a:
+        for col in ("flat", "trend"):
+            npt.assert_array_equal(np.asarray(a[k][col], dtype=np.float64),
+                                   np.asarray(b[k][col], dtype=np.float64))
+
+
+def test_auto_routers_masked_runs_match_unrouted(spark):
+    """Both routers send masked runs (``mask_col`` or ``mask_transit``)
+    to the unchunked operator for every row, long rows included, so the
+    routed output equals the unrouted operator's exactly."""
+    import pandas as pd
+
+    from wotan_spark.spark.detrend_op import detrend_sequences_auto
+    from wotan_spark.spark.rollup import (detrend_rollup_fused,
+                                          detrend_rollup_fused_auto)
+
+    seq = _seq(spark).withColumn(
+        "m", F.expr("transform(tokens, (x, i) -> i % 11 = 0)"))
+    assert seq.filter(F.col("n_tok") > 700).count() > 0
+    kw = dict(window_length=17)
+    for mask in ({"mask_col": "m"}, {"mask_transit": (97.0, 9.0, 20.0)}):
+        routed = detrend_sequences_auto(seq, "biweight", chunk_threshold=700,
+                                        chunk_size=250, **kw, **mask)
+        plain = detrend_sequences(seq, "biweight", **kw, **mask)
+        _assert_array_rows_equal(routed, plain)
+        key = ["doc_id", "bucket"]
+        routed = _sorted_frame(detrend_rollup_fused_auto(
+            seq, "biweight", factor=10, chunk_threshold=700, chunk_size=250,
+            **kw, **mask), key)
+        plain = _sorted_frame(detrend_rollup_fused(
+            seq, "biweight", factor=10, **kw, **mask), key)
+        pd.testing.assert_frame_equal(routed, plain, check_exact=True)
+
+
+def test_chunked_matches_unchunked_break_tolerance_zero_edge_cutoff(spark):
+    """``break_tolerance=0`` means "never split" in the kernel, but the
+    chunk overlap keeps the finite value (window_length + 1); with an
+    ``edge_cutoff`` the chunked paths still equal the unchunked ones."""
+    import pandas as pd
+
+    from wotan_spark.spark.detrend_op import _chunk_overlap
+    from wotan_spark.spark.rollup import (detrend_rollup_fused,
+                                          detrend_rollup_fused_auto)
+
+    kw = dict(window_length=17, break_tolerance=0, edge_cutoff=5)
+    assert _chunk_overlap(dict(kw, method="biweight")) == 18
+    seq = _seq(spark)
+    chunked = detrend_sequences_chunked(seq, "biweight", chunk_size=256, **kw)
+    _assert_array_rows_equal(chunked,
+                             detrend_sequences(seq, "biweight", **kw))
+    key = ["doc_id", "bucket"]
+    routed = _sorted_frame(detrend_rollup_fused_auto(
+        seq, "biweight", factor=10, chunk_threshold=700, chunk_size=250,
+        **kw), key)
+    plain = _sorted_frame(detrend_rollup_fused(seq, "biweight", factor=10,
+                                               **kw), key)
+    pd.testing.assert_frame_equal(routed, plain, check_exact=True)
+
+
+def test_split_chunks_layout_and_empty_tokens(spark):
+    """Chunk rows: t0 = chunk_id * chunk_size, lead/tail capped by the
+    overlap and the series ends; an empty ``tokens`` array is one chunk
+    with core 0."""
+    df = spark.createDataFrame(
+        [("a", list(range(10)), 10, "s"), ("e", [], 0, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    rows = [tuple(r) for r in split_chunks(df, 4, 2)
+            .orderBy("doc_id", "chunk_id").collect()]
+    assert rows == [
+        ("a", 0, 0, 0, 4, 10, "s", [0, 1, 2, 3, 4, 5]),
+        ("a", 1, 4, 2, 4, 10, "s", [2, 3, 4, 5, 6, 7, 8, 9]),
+        ("a", 2, 8, 2, 2, 10, "s", [6, 7, 8, 9]),
+        ("e", 0, 0, 0, 0, 0, "s", []),
+    ]

@@ -24,6 +24,19 @@ from wotan_spark.kernels.windows import (default_cval, running_slider,
                                          running_slider_iterative)
 
 
+def window_defaults(window_length: float | None,
+                    break_tolerance: float | None) -> tuple[float, float]:
+    """``detrend_series``' resolved ``(window_length, break_tolerance)``:
+    None -> 2 and None -> window_length / 2.  A ``break_tolerance`` of 0 is
+    returned as 0; the kernel then reads it as "never split" (inf), while
+    the chunk overlap keeps the finite value."""
+    if window_length is None:
+        window_length = 2  # so break_tolerance defaults to 1 for supersmoother
+    if break_tolerance is None:
+        break_tolerance = window_length / 2
+    return window_length, break_tolerance
+
+
 @dataclass
 class DetrendResult:
     flatten_lc: np.ndarray
@@ -59,10 +72,8 @@ def detrend_series(
     if method == "supersmoother" and cval is not None and 0 < cval < 10:
         supersmoother_alpha = cval
 
-    if window_length is None:
-        window_length = 2  # so break_tolerance defaults to 1 for supersmoother
-    if break_tolerance is None:
-        break_tolerance = window_length / 2
+    window_length, break_tolerance = window_defaults(window_length,
+                                                     break_tolerance)
     if break_tolerance == 0:
         break_tolerance = np.inf
 

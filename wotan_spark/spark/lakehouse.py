@@ -634,6 +634,13 @@ class SnapshotTable:
                    "double", "decimal", "date", "timestamp",
                    "timestamp_ntz"}
         dtypes = dict(df.dtypes)
+        if len(cols) > 64 // bits:
+            # bit b of column ci lands at b * len(cols) + ci; past bit 63
+            # the shift wraps and overwrites other columns' bits
+            raise ValueError(
+                f"z-order over {len(cols)} columns at {bits} bits each "
+                f"needs {len(cols) * bits} bits; a 64-bit key holds at "
+                f"most {64 // bits} columns")
 
         def _as_double(c: str) -> "Column":
             # date -> double casts to NULL in Spark; route via timestamp
@@ -821,6 +828,9 @@ class SnapshotTable:
             raise ValueError("pass where or where_in, not both")
         vals: list = []
         if where is not None:
+            if not where:
+                raise ValueError("where needs at least one (col, lo, hi) "
+                                 "clause")
             clauses = ([tuple(where)] if isinstance(where[0], str)
                        else [tuple(cl) for cl in where])
             for cl in clauses:

@@ -3,7 +3,10 @@
 Tier-10 aggregates are computed inside the same packed, shuffle-free pass
 shape as the detrend itself: bucket membership (``t div 10``) is a
 within-series property, so one ``mapInPandas`` over the packed arrays emits
-bucket rows with no exchange.  Tier-100 is then *cascaded from tier-10*
+bucket rows with no exchange.  The fused detrend + tier pass runs the kernel
+through ``detrend_op``'s row driver, on whole rows or on bucket-aligned chunk
+cores, and ``detrend_rollup_fused_auto`` picks between them with
+``detrend_op``'s router.  Tier-100 is then *cascaded from tier-10*
 (never from raw) as a plain ``groupBy`` over additive components — the
 continuous-aggregate pattern: count/sum/min/max re-aggregate exactly;
 ``*_mean`` is re-derived as sum/count; the non-additive median exists only
@@ -18,7 +21,7 @@ whose estimator NaN-ed the edge).
 from __future__ import annotations
 
 import warnings
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
+from wotan_spark.spark.detrend_op import _detrend_rows, _route_chunks
 from wotan_spark.spark.synth import SENTINEL, decode_tokens
 
 TIER_SCHEMA = StructType([
@@ -96,14 +100,18 @@ def _tier_arrays(y: np.ndarray, flat: np.ndarray, trend: np.ndarray,
             tcnt, tsum, tmean, fcnt, fsum, fmean)
 
 
-def _tier_frame(doc_ids: list, rows: list) -> pd.DataFrame:
-    """Concatenate per-series (repeated doc_id, 13-column tuple) rows into
-    one ``TIER_SCHEMA`` pandas frame; empty-batch safe."""
-    if not doc_ids:
+def _tier_frame(rows: Iterable[tuple]) -> pd.DataFrame:
+    """Concatenate per-series ``(doc_id, 13-column tuple)`` rows into one
+    ``TIER_SCHEMA`` pandas frame; empty-batch safe."""
+    doc_ids, cols = [], []
+    for doc_id, c in rows:
+        doc_ids.append(np.repeat(doc_id, len(c[0])))
+        cols.append(c)
+    if not cols:
         return pd.DataFrame({k: [] for k in ("doc_id",) + _TIER_KEYS})
     out = {"doc_id": np.concatenate(doc_ids)}
     for i, k in enumerate(_TIER_KEYS):
-        out[k] = np.concatenate([r[i] for r in rows])
+        out[k] = np.concatenate([c[i] for c in cols])
     return pd.DataFrame(out)
 
 
@@ -113,19 +121,35 @@ def rollup_tier10(detrended: DataFrame, factor: int = 10) -> DataFrame:
 
     def roll(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            doc_ids: list[np.ndarray] = []
-            rows: list[tuple] = []
-            for doc_id, tokens, flat, trend in zip(
-                    pdf["doc_id"], pdf["tokens"], pdf["flat"], pdf["trend"]):
-                y = decode_tokens(np.asarray(tokens, dtype=np.int32))
-                cols = _tier_arrays(y, np.asarray(flat, dtype=np.float64),
-                                    np.asarray(trend, dtype=np.float64),
-                                    factor)
-                doc_ids.append(np.repeat(doc_id, len(cols[0])))
-                rows.append(cols)
-            yield _tier_frame(doc_ids, rows)
+            yield _tier_frame(
+                (doc_id, _tier_arrays(
+                    decode_tokens(np.asarray(tokens, dtype=np.int32)),
+                    np.asarray(flat, dtype=np.float64),
+                    np.asarray(trend, dtype=np.float64), factor))
+                for doc_id, tokens, flat, trend in zip(
+                    pdf["doc_id"], pdf["tokens"], pdf["flat"], pdf["trend"]))
 
     return detrended.mapInPandas(roll, schema=TIER_SCHEMA)
+
+
+def _tier_pass(df: DataFrame, params: dict, factor: int,
+               chunked: bool = False, mask_col: str | None = None,
+               mask_transit: tuple[float, float, float] | None = None
+               ) -> DataFrame:
+    """One ``mapInPandas`` emitting the tier rows of every row (whole
+    rows) or chunk core (``split_chunks`` rows, whose bucket-aligned
+    ``t0`` offsets the bucket ids)."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _tier_frame(
+                (doc_id, _tier_arrays(y, flat, trend, factor,
+                                      b0=t0 // factor))
+                for doc_id, (t0, _, y, flat, trend) in zip(
+                    pdf["doc_id"], _detrend_rows(pdf, params, chunked,
+                                                 mask_col, mask_transit)))
+
+    return df.mapInPandas(run, schema=TIER_SCHEMA)
 
 
 def detrend_rollup_fused(df: DataFrame, method: str = "biweight",
@@ -141,36 +165,8 @@ def detrend_rollup_fused(df: DataFrame, method: str = "biweight",
     in ``detrend_sequences`` (they become the per-row ``mask`` kernel
     parameter; forwarding them into the kernel verbatim was a crash —
     round-5b review finding)."""
-    from wotan_spark.spark.detrend_op import _detrend_one
-    params = dict(params, method=method)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from wotan_spark.kernels.series import transit_mask as _tmask
-
-        for pdf in batches:
-            if mask_col is not None:
-                masks = [np.asarray(m, dtype=bool) for m in pdf[mask_col]]
-            elif mask_transit is not None:
-                period, duration, t0 = mask_transit
-                masks = [_tmask(np.arange(len(toks), dtype=np.float64),
-                                period, duration, t0)
-                         for toks in pdf["tokens"]]
-            else:
-                masks = None
-            doc_ids: list[np.ndarray] = []
-            rows: list[tuple] = []
-            for row_i, (doc_id, toks) in enumerate(zip(pdf["doc_id"],
-                                                       pdf["tokens"])):
-                toks = np.asarray(toks, dtype=np.int32)
-                p = (params if masks is None
-                     else dict(params, mask=masks[row_i]))
-                flat, trend = _detrend_one(toks, p)
-                cols = _tier_arrays(decode_tokens(toks), flat, trend, factor)
-                doc_ids.append(np.repeat(doc_id, len(cols[0])))
-                rows.append(cols)
-            yield _tier_frame(doc_ids, rows)
-
-    return df.mapInPandas(run, schema=TIER_SCHEMA)
+    return _tier_pass(df, dict(params, method=method), factor,
+                      mask_col=mask_col, mask_transit=mask_transit)
 
 
 def detrend_rollup_fused_auto(df: DataFrame, method: str = "biweight",
@@ -179,7 +175,8 @@ def detrend_rollup_fused_auto(df: DataFrame, method: str = "biweight",
                               chunk_size: int | None = None,
                               num_partitions: int | None = None,
                               **params) -> DataFrame:
-    """Skew-safe fused detrend + tier rollup.
+    """Skew-safe fused detrend + tier rollup, routed by
+    ``detrend_op._route_chunks``.
 
     Short rows take the zero-shuffle fused pass (``detrend_rollup_fused``).
     Rows past ``chunk_threshold`` tokens are overlap-chunked and salted
@@ -191,57 +188,12 @@ def detrend_rollup_fused_auto(df: DataFrame, method: str = "biweight",
     flat/trend array is ever shuffled or reassembled.  Exactness vs the
     unchunked fused pass is pytest-asserted column-for-column.
     """
-    from wotan_spark.spark.detrend_op import (_CHUNKABLE_METHODS,
-                                              AUTO_CHUNK_THRESHOLD,
-                                              _chunk_overlap, _detrend_one,
-                                              split_chunks)
-
-    if chunk_threshold is None:
-        chunk_threshold = AUTO_CHUNK_THRESHOLD
-    if method not in _CHUNKABLE_METHODS or "mask_col" in params \
-            or "mask_transit" in params:
-        # masked runs take the unchunked fused pass, which handles the
-        # mask kwargs itself (a mask's irregular NaN pattern breaks the
-        # chunk-core exactness argument)
-        return detrend_rollup_fused(df, method, factor=factor, **params)
-    if chunk_size is None:
-        chunk_size = chunk_threshold
-    chunk_size = max(factor, (chunk_size // factor) * factor)  # bucket-align
-
     run_params = dict(params, method=method)
-    overlap = _chunk_overlap(run_params)
-
-    short = df.filter(F.col("n_tok") <= chunk_threshold)
-    long_ = df.filter(F.col("n_tok") > chunk_threshold)
-    chunks = split_chunks(long_, chunk_size, overlap)
-    if num_partitions is None:
-        num_partitions = max(
-            df.sparkSession.sparkContext.defaultParallelism, 8)
-    # explicit count: a bare column repartition is AQE-coalescible (bytes
-    # small, CPU heavy) — see detrend_sequences_chunked
-    chunks = chunks.repartition(num_partitions,
-                                F.col("doc_id"), F.col("chunk_id"))
-
-    def roll_chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list[np.ndarray] = []
-            rows: list[tuple] = []
-            for doc_id, toks, t0, lead, core in zip(
-                    pdf["doc_id"], pdf["tokens"], pdf["t0"], pdf["lead"],
-                    pdf["core"]):
-                toks = np.asarray(toks, dtype=np.int32)
-                flat, trend = _detrend_one(toks, run_params)
-                sl = slice(int(lead), int(lead) + int(core))
-                cols = _tier_arrays(decode_tokens(toks[sl]), flat[sl],
-                                    trend[sl], factor,
-                                    b0=int(t0) // factor)  # t0 bucket-aligned
-                doc_ids.append(np.repeat(doc_id, len(cols[0])))
-                rows.append(cols)
-            yield _tier_frame(doc_ids, rows)
-
-    long_tiers = chunks.mapInPandas(roll_chunk, schema=TIER_SCHEMA)
-    return detrend_rollup_fused(short, method, factor=factor,
-                                **params).unionByName(long_tiers)
+    return _route_chunks(
+        df, method, params, chunk_threshold, chunk_size, num_partitions,
+        lambda d: detrend_rollup_fused(d, method, factor=factor, **params),
+        lambda chunks: _tier_pass(chunks, run_params, factor, chunked=True),
+        align=factor)
 
 
 def cascade_tier(tier: DataFrame, step: int = 10) -> DataFrame:

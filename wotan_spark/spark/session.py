@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``local[N]`` core count: ``SPARK_GRAFT_CPUS`` when set, else the
+    host's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(app_name: str = "wotan-spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None,
@@ -22,7 +28,7 @@ def get_spark(app_name: str = "wotan-spark", cores: int | None = None,
     executor-scaling evidence (bench_scaling.py mode=executors); ``cores``
     then still sizes shuffle partitions."""
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
